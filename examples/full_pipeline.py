@@ -90,7 +90,7 @@ def main() -> None:
 
     # 3. tier rollups materialized (scalar + angular partial state)
     lake.write_rollup(rollup_scalar(lake.read(tier="raw", path="navigation.speedOverGround"), "5s"), "5s")
-    print(f"3. tiers on disk: {sorted(r['tier'] for r in lake.read().select('tier').distinct().collect())}")
+    print(f"3. tiers on disk: {sorted(lake.tiers())}")
 
     # 3b. late data arrives for yesterday: export to raw, then refresh the
     # tier INCREMENTALLY — only the touched (context, path, day) partition

@@ -37,7 +37,7 @@ def align_pivot(
 def align_join(frames: dict[str, DataFrame], bucket_col: str, value_col: str) -> DataFrame:
     """k-way full-outer join form (used when each series was aggregated by a
     different method and lives in its own frame — the reference's per-path
-    query model). Null-fills like the reference's JS merge."""
+    query model). Null-fills like the reference's JS merge. The rows come
+    back unordered: callers sort once, after their last transformation."""
     renamed = [df.select(F.col(bucket_col), F.col(value_col).alias(name)) for name, df in frames.items()]
-    joined = reduce(lambda a, b: a.join(b, on=bucket_col, how="full_outer"), renamed)
-    return joined.orderBy(bucket_col)
+    return reduce(lambda a, b: a.join(b, on=bucket_col, how="full_outer"), renamed)

@@ -92,11 +92,7 @@ def migrate_rollup_epoch(lake: Lake, tiers: list[str] | None = None, dry_run: bo
 
     root = lake.roots[0]
     if tiers is None:
-        tiers = [
-            d.split("tier=", 1)[1]
-            for d in (lake._tier_dirs(root))
-            if not d.endswith("tier=raw")
-        ]
+        tiers = [t for t in lake._tier_names(root) if t != "raw"]
     migrated: dict[str, int] = {}
     for tier in tiers:
         local = f"{root}/tier={tier}".removeprefix("file:")

@@ -44,38 +44,30 @@ class HistoryPlanner:
         self.lake = lake
         self.buffer = buffer
         self.units_by_path = units_by_path or {}
-        self._tiers_cache: set[str] | None = None
-        self._comp_cache: dict[tuple[str | None, str], list[str]] = {}
 
     # ------------------------------------------------------------------
+    # Planning is metadata-only: tiers, components and schemas come from the
+    # lake's directory listing, Parquet footers and its schema catalog, so a
+    # request runs no Spark job before the result collect, except one schema
+    # merge job per subtree whose file listing the catalog has not seen.
     def available_tiers(self) -> set[str]:
-        if self._tiers_cache is None:
-            rows = self.lake.read().select("tier").distinct().collect()
-            self._tiers_cache = {r[0] for r in rows}
-        return self._tiers_cache
+        return self.lake.tiers()
 
     def _is_angular(self, path: str) -> bool:
         return self.units_by_path.get(path) == "rad"
 
-    def _object_components(self, path: str, context: str | None) -> list[str]:
+    def _object_components(self, path: str, context: str | None, rng: TimeRange) -> list[str]:
         """Discover a path's flattened value_* component columns — the
         reference's schema probe (union of value_* columns across the path's
-        files, cached 30 min; schema-cache.ts:46-173). Ingest batches can
-        union schemas across paths, so presence isn't enough: a component
-        counts only if it carries ANY non-null data for this path."""
-        key = (context, path)
-        if key not in self._comp_cache:
-            raw = self.lake.read(tier="raw", context=context, path=path)
-            cand = [
-                c for c in raw.columns
-                if c.startswith("value_") and c not in ("value_text", "value_bool", "value_json")
-            ]
-            if cand:
-                counts = raw.select([F.count(c).alias(c) for c in cand]).first()
-                self._comp_cache[key] = sorted(c for c in cand if counts[c] > 0)
-            else:
-                self._comp_cache[key] = []
-        return self._comp_cache[key]
+        files; schema-cache.ts:46-173), here over the raw files of the
+        request's days. Ingest batches can union schemas across paths, so
+        presence isn't enough: a component counts only if its footer
+        statistics show non-null data for this path."""
+        return sorted(self.lake.nonnull_columns(
+            "raw", context, path, rng.from_ts, rng.to_ts,
+            among=lambda c: c.startswith("value_")
+            and c not in ("value_text", "value_bool", "value_json"),
+        ))
 
     # ------------------------------------------------------------------
     def get_values(
@@ -105,14 +97,16 @@ class HistoryPlanner:
 
         wide = align_join(frames, "bucket_ts", "value")
         wide = self._apply_smoothing(wide, specs)
-        return wide.orderBy("bucket_ts")
+        # the result is bounded (~500 buckets): one sorted partition, no
+        # range-partition sampling job and no exchange
+        return wide.coalesce(1).sortWithinPartitions("bucket_ts")
 
     # ------------------------------------------------------------------
     def _series_for(
         self, spec: PathSpec, rng: TimeRange, res_ms: int, context: str | None
     ) -> DataFrame:
         angular = self._is_angular(spec.path)
-        comp_cols = self._object_components(spec.path, context)
+        comp_cols = self._object_components(spec.path, context, rng)
         is_obj = bool(comp_cols) and not is_string_path(spec.path)
         tier = route_tier(spec, res_ms, self.available_tiers(), is_object_path=is_obj)
         sources: list[tuple[DataFrame, int]] = []
@@ -203,6 +197,9 @@ class HistoryPlanner:
         ts = F.col("signalk_timestamp").cast("timestamp")
         aggs = []
         for c in comp_cols:
+            if c not in df.columns:  # e.g. a hot buffer holding no object rows yet
+                aggs.append(F.lit(None).cast("double").alias(c))
+                continue
             numeric = isinstance(df.schema[c].dataType, (T.DoubleType, T.FloatType))
             method = spec.method if numeric else "first"
             aggs.append(method_agg(method, F.col(c), ts).alias(c))

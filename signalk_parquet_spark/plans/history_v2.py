@@ -66,7 +66,8 @@ class HistoryProviderV2:
                     # v2: union BEFORE aggregation (history-provider.ts:390-394)
                     source = blend_union([cold, hot])
             frames[spec.column_name] = self._aggregate(source, spec, res_ms)
-        return align_join(frames, "bucket_ts", "value").orderBy("bucket_ts")
+        # bounded result: one sorted partition, no range-partition sampling
+        return align_join(frames, "bucket_ts", "value").coalesce(1).sortWithinPartitions("bucket_ts")
 
     def _aggregate(self, df: DataFrame, spec: PathSpec, res_ms: int) -> DataFrame:
         if is_position_path(spec.path):

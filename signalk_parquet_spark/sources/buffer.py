@@ -19,13 +19,14 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lake import Lake
+from .lake import Lake, SchemaCatalog, walk_local_files
 
 
 class HotBuffer:
     def __init__(self, spark: SparkSession, staging_dir: str):
         self.spark = spark
         self.staging_dir = staging_dir
+        self._catalog = SchemaCatalog(spark)
 
     def append(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.staging_dir)
@@ -37,9 +38,12 @@ class HotBuffer:
         from_ts: datetime | None = None,
         to_ts: datetime | None = None,
     ) -> DataFrame:
-        if not os.path.exists(self.staging_dir):
+        # the staging files, validated against the catalog the way Lake.read
+        # does: appends and compactions re-merge the schema once
+        listing = tuple(walk_local_files(self.staging_dir, ""))
+        if not listing:
             return self.spark.createDataFrame([], "context string, path string")
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.staging_dir)
+        df = self._catalog.read(self.staging_dir, listing, base=self.staging_dir)
         if context:
             df = df.filter(F.col("context") == context)
         if path:

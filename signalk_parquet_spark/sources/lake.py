@@ -1,15 +1,28 @@
-"""The Parquet lake: partitioned write + pruned, schema-merged read.
+"""The Parquet lake: partitioned write + pruned read over a schema catalog.
 
 Replaces the reference's glob-construction machinery (S1-S4 in SURVEY §2.1)
 with native Spark partition handling:
   - write: df.write.partitionBy("tier","context","path","year","day")
     — atomic via the job commit protocol (replaces temp-file+rename,
     parquet-writer.ts:131-306)
-  - read: spark.read.option("mergeSchema").parquet(base) + ordinary filters
-    on the partition columns; Catalyst prunes partitions (replaces
+  - read: spark.read.schema(<catalog entry>).parquet(<subtree>) + ordinary
+    filters on the partition columns; Catalyst prunes partitions (replaces
     hive-path-builder.ts:232-393's explicit day globs)
-  - multi-root federation (local ∪ S3): pass several base paths —
-    spark.read.parquet(*roots) (replaces HistoryAPI.ts:1461-1467's UNION ALL)
+  - multi-root federation (local ∪ S3): one subtree read per root, unioned
+    by name (replaces HistoryAPI.ts:1461-1467's UNION ALL)
+
+The schema catalog replaces the reference's 30-min schema cache
+(schema-cache.ts:46-173) with exact validation instead of a TTL. Each read
+lists its subtree's data files on the driver (os calls for local roots, the
+Hadoop FileSystem API for object stores). A catalog entry holds the merged
+schema together with the listing (path, size, mtime) it was merged from; a
+read whose listing matches reuses the schema, and a read whose listing
+differs — a file added, removed or rewritten by this Lake, another instance
+or a streaming sink — re-merges once, with Spark's footer-merge job.
+
+Other metadata questions run no Spark job on a local root: tiers come from
+the tier= directory listing, discovery from the partition directories that
+hold data, and a path's value_* components from Parquet footer statistics.
 
 At 100 TB: year/day partition pruning bounds every query to its time range;
 context/path partitioning keeps per-series scans file-local. Partition count
@@ -19,20 +32,37 @@ year/day add ~366/year.
 
 from __future__ import annotations
 
+import glob
 import logging
+import os
+import re
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass, field
 from datetime import datetime
+from typing import TypeVar
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .hive_paths import (
     EXCLUDED_SUBDIRS,
     days_in_range,
     sanitize_context,
     sanitize_path,
+    unsanitize_context,
+    unsanitize_path,
 )
 
 PARTITION_COLS = ("tier", "context", "path", "year", "day")
+
+_DAY_RE = re.compile(r"year=[^/]+/day=[^/]+")
+
+T = TypeVar("T")
+
+#: (path relative to its root, size, mtime) of every data file a read lists
+Listing = tuple[tuple[str, int, int], ...]
 
 _LOG = logging.getLogger(__name__)
 
@@ -46,6 +76,7 @@ class Lake:
             raise ValueError("at least one lake root required")
         self.spark = spark
         self.roots = roots
+        self._catalog = SchemaCatalog(spark)
 
     # --- write -----------------------------------------------------------
     def write_records(self, df: DataFrame, tier: str = "raw", mode: str = "append") -> None:
@@ -114,37 +145,39 @@ class Lake:
         from_ts: datetime | None = None,
         to_ts: datetime | None = None,
     ) -> DataFrame:
-        """Partition-pruned, schema-merged scan across all roots.
+        """Partition-pruned scan across all roots, one subtree per (root, tier).
 
-        Every filter lands on a partition column, so Catalyst prunes
-        directories before listing files (check `.explain()` for
-        PartitionFilters). Excluded maintenance subdirs are dropped the way
-        the reference does by filename (HistoryAPI.ts:1452).
+        Each subtree is read with its catalog schema: the union of the
+        footers of exactly the files the read lists, so a path scope shows
+        only its own subtree's columns. Every filter lands on a partition
+        column, so Catalyst prunes directories before listing files (check
+        `.explain()` for PartitionFilters). Excluded maintenance subdirs are
+        dropped the way the reference does by filename (HistoryAPI.ts:1452).
         """
         dfs = []
+        has_excluded = False
         for root in self.roots:
-            # narrow the physical read to the partition subtree so mergeSchema
+            # narrow the physical read to the partition subtree so the schema
             # unions only THIS path's footers — a lake-wide union would make
             # every path appear to carry every other path's value_* columns
             # (the reference scopes its globs per path the same way,
-            # schema-cache.ts:46-173)
-            if tier:
-                tier_bases = [f"{root}/tier={tier}"]
-            else:
-                # tier=None must NOT use a single tier=* discovery: raw is 5
-                # partition levels, rollup tiers are 6 (trailing epoch), and
-                # mixed-depth discovery raises 'Conflicting partition column
-                # names'. Enumerate tier subtrees and read each uniformly.
-                tier_bases = self._tier_dirs(root)
-            for base in tier_bases:
-                sub = base
+            # schema-cache.ts:46-173). tier=None must NOT use a single tier=*
+            # discovery: raw is 5 partition levels, rollup tiers are 6
+            # (trailing epoch), and mixed-depth discovery raises 'Conflicting
+            # partition column names'. Read each tier subtree uniformly.
+            for t in [tier] if tier else self._tier_names(root):
+                sub = f"tier={t}"
                 if context:
                     sub += f"/context={sanitize_context(context)}"
                 elif path:
                     sub += "/context=*"
                 if path:
                     sub += f"/path={sanitize_path(path)}"
-                df = self._read_subtree(root, sub)
+                listing = self._listing(root, sub)
+                if not listing:
+                    continue
+                has_excluded = has_excluded or any(_in_excluded_dir(f[0]) for f in listing)
+                df = self._read_subtree(root, f"{root}/{sub}", listing)
                 if df is not None:
                     dfs.append(df)
         if not dfs:
@@ -166,9 +199,9 @@ class Lake:
         # HistoryAPI.ts:1452). input_file_name() is NONDETERMINISTIC, and a
         # nondeterministic Filter is a pushdown BARRIER — it silently disables
         # partition pruning and parquet filter pushdown for the whole scan.
-        # So add it only when such dirs actually exist (normally never: our
-        # lake quarantines to a separate root).
-        if self._has_excluded_dirs():
+        # So add it only when a file this read lists sits in such a dir
+        # (normally never: our lake quarantines to a separate root).
+        if has_excluded:
             excl = "|".join(EXCLUDED_SUBDIRS)
             df = df.filter(~F.input_file_name().rlike(f"/({excl})/"))
         if tier:
@@ -197,32 +230,15 @@ class Lake:
             df = df.filter(F.col(ts_col) < F.lit(to_ts))  # half-open [from, to)
         return df
 
-    def _tier_dirs(self, root: str) -> list[str]:
-        """List ``<root>/tier=*`` subtrees via the Hadoop FileSystem API (works
-        for local, file:, and object-store roots alike). A missing or
-        unreachable root yields [] — the reference's hybrid→local fallback
-        skips absent/failed roots too (HistoryAPI falls back to local when
-        the cloud supplement errors)."""
-        try:
-            jvm = self.spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(root)
-            fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            if not fs.exists(hpath):
-                return []
-            return sorted(
-                str(st.getPath())
-                for st in fs.listStatus(hpath)
-                if st.isDirectory() and st.getPath().getName().startswith("tier=")
-            )
-        except Exception:
-            # unreachable scheme/endpoint (no s3a jars, auth, network):
-            # degrade to the surviving roots, matching reference behavior
-            return []
+    def _read_subtree(self, root: str, sub: str, listing: Listing) -> DataFrame | None:
+        """Read one partition subtree through the catalog; None when it
+        cannot be read (see ``_guarded``)."""
+        return self._guarded(sub, lambda: self._catalog.read(sub, listing, base=root))
 
-    def _read_subtree(self, root: str, sub: str) -> DataFrame | None:
-        """Read one partition subtree; None when the subtree doesn't exist or
-        its root is unreachable (the hybrid→local fallback: connectivity or
-        auth failures on one root must not sink the other roots' data).
+    def _guarded(self, sub: str, fn: Callable[[], T]) -> T | None:
+        """fn(), or None when ``sub``'s root is unreachable (the hybrid→local
+        fallback: connectivity or auth failures on one root must not sink
+        the other roots' data).
 
         The one error that must SURFACE is 'Conflicting partition column
         names' — a malformed layout under a reachable root: a blanket except
@@ -231,15 +247,11 @@ class Lake:
         from pyspark.errors import AnalysisException
 
         try:
-            return (
-                self.spark.read.option("mergeSchema", "true")
-                .option("basePath", root)
-                .parquet(sub)
-            )
+            return fn()
         except AnalysisException as e:
             msg = str(e)
             if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None  # the one expected skip case: root has no such subtree
+                return None  # the subtree vanished between listing and read
             if "conflicting" in msg.lower():
                 raise
             # a genuine schema problem (e.g. an incompatible mergeSchema type
@@ -253,45 +265,251 @@ class Lake:
             _LOG.warning("lake: unreachable root %s: %s", sub, e)
             return None  # connectivity/auth/missing fs jars
 
-    def _has_excluded_dirs(self) -> bool:
-        """Driver-side check for maintenance subdirs in local roots (remote
-        object-store roots are assumed clean — our lifecycle never writes
-        maintenance dirs inside partitions)."""
-        import os
+    # --- driver-side listing ----------------------------------------------
+    def _dirs(self, root: str, pattern: str) -> list[str]:
+        """Directories matching the glob ``<root>/<pattern>``, relative to
+        the root. A missing or unreachable root yields [] — the reference's
+        hybrid→local fallback skips absent/failed roots too (HistoryAPI
+        falls back to local when the cloud supplement errors)."""
+        local = _local_dir(root)
+        if local is not None:
+            return sorted(
+                os.path.relpath(d, local)
+                for d in glob.glob(os.path.join(glob.escape(local), pattern))
+                if os.path.isdir(d)
+            )
+        try:
+            fs, base = self._hadoop_fs(root)
+            found = fs.globStatus(self.spark._jvm.org.apache.hadoop.fs.Path(f"{base}/{pattern}"))
+            return sorted(
+                st.getPath().toString()[len(base) + 1:] for st in found or [] if st.isDirectory()
+            )
+        except Exception as e:
+            # unreachable scheme/endpoint (no s3a jars, auth, network):
+            # degrade to the surviving roots, matching reference behavior
+            _LOG.warning("lake: unreachable root %s: %s", root, e)
+            return []
 
-        if getattr(self, "_excluded_cache", None) is None:
-            found = False
-            for root in self.roots:
-                local = root.removeprefix("file:")
-                if "://" in local:
-                    continue
-                for _dirpath, dirnames, _ in os.walk(local):
-                    if any(d in EXCLUDED_SUBDIRS for d in dirnames):
-                        found = True
-                        break
-                if found:
-                    break
-            self._excluded_cache = found
-        return self._excluded_cache
+    def _files(self, root: str, rel_dir: str) -> list[tuple[str, int, int]]:
+        """Data files under ``<root>/<rel_dir>`` as (path relative to the
+        root, size, mtime), skipping the names Spark's file index skips. An
+        object-store listing that fails yields [], like an unreachable root
+        in ``_dirs``."""
+        local = _local_dir(root)
+        if local is not None:
+            return list(walk_local_files(local, rel_dir))
+        try:
+            fs, base = self._hadoop_fs(root)
+            it = fs.listFiles(self.spark._jvm.org.apache.hadoop.fs.Path(f"{base}/{rel_dir}"), True)
+            files = []
+            while it.hasNext():
+                st = it.next()
+                rel = st.getPath().toString()[len(base) + 1:]
+                if not any(_hidden(part) for part in rel.split("/")):
+                    files.append((rel, st.getLen(), st.getModificationTime()))
+            return files
+        except Exception as e:
+            _LOG.warning("lake: unreachable root %s: %s", root, e)
+            return []
+
+    def _hadoop_fs(self, root: str):
+        """(FileSystem, qualified root string) for a non-local root."""
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path(root)
+        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return fs, fs.makeQualified(hpath).toString().rstrip("/")
+
+    def _listing(self, root: str, pattern: str) -> Listing:
+        """Every data file under the directories matching ``pattern``, sorted
+        — the catalog's validation key for that subtree."""
+        return tuple(sorted(f for d in self._dirs(root, pattern) for f in self._files(root, d)))
+
+    def _tier_names(self, root: str) -> list[str]:
+        return [d.split("=", 1)[1] for d in self._dirs(root, "tier=*")]
+
+    # --- metadata (no Spark job) ---------------------------------------------
+    def tiers(self) -> set[str]:
+        """Tiers with a ``tier=`` directory under any root."""
+        return {t for root in self.roots for t in self._tier_names(root)}
+
+    def nonnull_columns(
+        self,
+        tier: str,
+        context: str | None,
+        path: str,
+        from_ts: datetime,
+        to_ts: datetime,
+        among: Callable[[str], bool] = lambda c: True,
+    ) -> set[str]:
+        """Columns ``among`` accepts that hold at least one non-null value in
+        ``path``'s files of the days [from_ts, to_ts] touches. The subtree's
+        catalog schema answers first: when it has no such column, no footer
+        is read. Otherwise Parquet footer statistics answer: a column counts
+        in a file when its null count is below the file's row count. When
+        none of those days has files (the range lies in the hot buffer, or
+        retention dropped it), the newest day with files answers. Answers
+        are kept in the catalog entry and expire with it, so a repeat request
+        over an unchanged subtree reads no footer. Footers of object-store
+        roots have no driver-side reader here, so their files are counted
+        with one Spark job instead."""
+        days = {f"year={y}/day={d:03d}" for y, d in days_in_range(from_ts, to_ts)}
+        sub = f"tier={tier}/context={sanitize_context(context) if context else '*'}"
+        sub += f"/path={sanitize_path(path)}"
+        wanted: set[str] = set()
+        entries: dict[str, _Entry] = {}
+        by_day: dict[str, list[tuple[str, str]]] = {}
+        for root in self.roots:
+            scan, listing = f"{root}/{sub}", self._listing(root, sub)
+            if not listing:
+                continue
+            entry = self._guarded(scan, lambda: self._catalog.entry(scan, listing, root))
+            cols = {c for c in entry.schema.fieldNames() if among(c)} if entry else set()
+            if not cols:
+                continue
+            wanted |= cols
+            entries[root] = entry
+            for rel, _size, _mtime in listing:
+                if not _in_excluded_dir(rel):
+                    by_day.setdefault(_day_key(rel), []).append((root, rel))
+        if not by_day:
+            return set()
+        in_range = [f for day in days & by_day.keys() for f in by_day[day]]
+        files = in_range or by_day[max(by_day)]
+        found: set[str] = set()
+        for root, entry in entries.items():
+            rels = tuple(rel for r, rel in files if r == root)
+            if rels and rels not in entry.nonnull:
+                entry.nonnull[rels] = self._count_nonnull(root, rels)
+            found |= entry.nonnull.get(rels, set())
+        return found & wanted
+
+    def _count_nonnull(self, root: str, rels: tuple[str, ...]) -> set[str]:
+        """Columns with a non-null value in any of ``rels``: footers for a
+        local root, one Spark job for an object-store root."""
+        local = _local_dir(root)
+        if local is not None:
+            return set().union(*(_footer_nonnull_columns(os.path.join(local, r)) for r in rels))
+        df = self.spark.read.option("mergeSchema", "true").parquet(*(f"{root}/{r}" for r in rels))
+        counts = df.select([F.count(F.col(f"`{c}`")).alias(c) for c in df.columns]).first()
+        return {c for c in df.columns if counts[c]}
 
     def schema_probe(self, tier: str = "raw") -> list[str]:
-        """Column inventory (replaces parquet_schema() probing, S6)."""
+        """Column inventory (replaces parquet_schema() probing, S6) — the
+        catalog schema, merged only when the tier's files changed."""
         return self.read(tier=tier).columns
 
-    def discover_contexts(self) -> list[str]:
-        """DISTINCT context from partition metadata only — no file scan
-        (context-discovery.ts:250-256)."""
-        rows = self.read().select("context").distinct().collect()
-        from .hive_paths import unsanitize_context
+    def _partition_values(self, pattern: str) -> set[str]:
+        """Values of the last partition level of ``pattern`` whose directory
+        holds a data file outside the maintenance dirs."""
+        found = set()
+        for root in self.roots:
+            for d in self._dirs(root, pattern):
+                if any(not _in_excluded_dir(f[0]) for f in self._files(root, d)):
+                    found.add(unquote(d.rsplit("=", 1)[1]))
+        return found
 
-        return sorted(unsanitize_context(r[0]) for r in rows)
+    def discover_contexts(self) -> list[str]:
+        """DISTINCT context from partition directory names — no file scan
+        (context-discovery.ts:250-256)."""
+        return sorted(unsanitize_context(c) for c in self._partition_values("tier=*/context=*"))
 
     def discover_paths(self, context: str | None = None) -> list[str]:
-        df = self.read(context=context)
-        rows = df.select("path").distinct().collect()
-        from .hive_paths import unsanitize_path
+        ctx = sanitize_context(context) if context else "*"
+        return sorted(
+            unsanitize_path(p) for p in self._partition_values(f"tier=*/context={ctx}/path=*")
+        )
 
-        return sorted(unsanitize_path(r[0]) for r in rows)
+
+@dataclass
+class _Entry:
+    """A merged schema, valid for exactly the listing it was merged from,
+    and the footer answers computed under it (``Lake.nonnull_columns``:
+    non-null columns by file set)."""
+
+    listing: Listing
+    schema: StructType
+    nonnull: dict[tuple[str, ...], set[str]] = field(default_factory=dict)
+
+
+class SchemaCatalog:
+    """Merged Parquet schemas, one per scan path, each valid for exactly the
+    file listing it was merged from. A read with a matching listing passes
+    the schema to the reader and runs no Spark job; any other listing runs
+    Spark's footer-merge job once and replaces the entry."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._entries: dict[str, _Entry] = {}
+
+    def entry(self, scan: str, listing: Listing, base: str) -> _Entry:
+        entry = self._entries.get(scan)
+        if entry is None or entry.listing != listing:
+            reader = self.spark.read.option("basePath", base).option("mergeSchema", "true")
+            entry = self._entries[scan] = _Entry(listing, reader.parquet(scan).schema)
+        return entry
+
+    def read(self, scan: str, listing: Listing, base: str) -> DataFrame:
+        schema = self.entry(scan, listing, base).schema
+        return self.spark.read.option("basePath", base).schema(schema).parquet(scan)
+
+
+def _local_dir(root: str) -> str | None:
+    """The local filesystem path of ``root``; None for an object-store root."""
+    local = root.removeprefix("file:")
+    return None if "://" in local else local
+
+
+def _hidden(name: str) -> bool:
+    # the names Spark's file index skips: _SUCCESS, _temporary, .crc files
+    return name.startswith(("_", "."))
+
+
+def walk_local_files(local: str, rel_dir: str) -> Iterator[tuple[str, int, int]]:
+    """(path relative to ``local``, size, mtime) of the data files under
+    ``<local>/<rel_dir>``, in sorted order, skipping the names Spark skips."""
+    for dirpath, dirnames, filenames in os.walk(os.path.join(local, rel_dir)):
+        dirnames[:] = sorted(d for d in dirnames if not _hidden(d))
+        for name in sorted(filenames):
+            if _hidden(name):
+                continue
+            full = os.path.join(dirpath, name)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:  # deleted since the walk listed it
+                continue
+            yield os.path.relpath(full, local), st.st_size, st.st_mtime_ns
+
+
+def _in_excluded_dir(rel: str) -> bool:
+    return any(part in EXCLUDED_SUBDIRS for part in rel.split("/")[:-1])
+
+
+def _day_key(rel: str) -> str:
+    """The ``year=Y/day=D`` part of a file's path relative to the root."""
+    m = _DAY_RE.search(rel)
+    return m.group(0) if m else ""
+
+
+def _footer_nonnull_columns(file: str) -> set[str]:
+    """Columns of one Parquet file with at least one non-null value, read
+    from its footer; a chunk without a null count may hold data. A file
+    that vanished since its listing (retention, a day re-export) or is not
+    Parquet has none."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        md = pq.read_metadata(file)
+    except (OSError, pa.ArrowException):
+        return set()
+    nulls: dict[str, int] = {}
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        for j in range(rg.num_columns):
+            chunk = rg.column(j)
+            st = chunk.statistics
+            n = st.null_count if st is not None and st.has_null_count else 0
+            nulls[chunk.path_in_schema] = nulls.get(chunk.path_in_schema, 0) + n
+    return {c for c, n in nulls.items() if n < md.num_rows}
 
 
 def _sanitize_context_col(c):

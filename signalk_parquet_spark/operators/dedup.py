@@ -215,7 +215,12 @@ def prefix_jaccard_pairs(
         d.select("id", *block_cols, shl0.alias("shl"))
         .withColumn("sz", F.size("shl"))
     )
-    pre_len = (F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1).cast("int")
+    # ceil(t·|S| − ε): t·|S| can float-round just above an exact integer
+    # (0.07·100 = 7.000000000000001), and a plain ceil would then shorten
+    # the prefix by one and drop true pairs (same guard as containment)
+    pre_len = (
+        F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold) - F.lit(1e-9)) + 1
+    ).cast("int")
     if not rare_first:
         d = d.withColumn("pre", F.slice(F.col("shl"), 1, pre_len))
     if materialize:

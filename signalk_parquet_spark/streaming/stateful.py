@@ -5,23 +5,80 @@ The reference keeps threshold hysteresis and EMA state in in-process JS Maps
 lost on restart, impossible to scale out. Structured Streaming state stores
 give the same semantics with checkpointed, partitioned state.
 
-Two operators:
+Twelve streaming operators, all in append mode:
   - streaming_threshold_transitions: per-(context, path) hysteresis — emit
     only activated/deactivated transitions across micro-batches.
   - streaming_ema: per-series EMA whose previous value persists in state,
     so the recurrence continues seamlessly across micro-batches.
+  - six near-dup rungs, one per modality — streaming_neardup_minhash
+    (text, MinHash bands), streaming_containment (quotes/subsets),
+    streaming_semantic_dedup (embeddings), streaming_audio_neardup,
+    streaming_image_neardup and streaming_video_neardup. Each keys
+    stateful buckets by its batch twin's candidate condition and runs the
+    ONE keep-first-seen rule of :func:`_keep_first_seen_fn`; a rung only
+    binds how entries decode and how a pair scores.
+  - streaming_bloom_screen: stateless eval-contamination probe.
+  - streaming_heavy_hitters / streaming_grouped_heavy_hitters: Misra–Gries
+    candidate sketches per token-hash group.
+  - streaming_weighted_sample: per-group A-ES top-k.
+
+Every stateful group runs through :func:`_group_state_fn`, the one place
+that loads and stores state and owns the optional processing-time TTL.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+def _group_state_fn(body: Callable, schema: T.StructType, ttl_s: float | None = None):
+    """applyInPandasWithState function around ``body(key, batches,
+    stored state or None) -> (state to store, output frame)``. A call that
+    is the group's TTL expiry drops the state and emits nothing; any other
+    call runs ``body``, stores the state it returns and, with ``ttl_s``,
+    re-arms the processing-time timeout before emitting."""
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            yield pd.DataFrame(columns=schema.fieldNames())
+            return
+        new_state, out = body(key, pdfs, state.get if state.exists else None)
+        state.update(new_state)
+        if ttl_s is not None:
+            state.setTimeoutDuration(int(ttl_s * 1000))
+        yield out
+
+    return fn
+
+
+def _apply_with_state(
+    grouped: GroupedData,
+    fn,
+    schema: T.StructType,
+    state_schema: T.StructType,
+    ttl_s: float | None = None,
+) -> DataFrame:
+    """Append-mode applyInPandasWithState; ``ttl_s`` selects the
+    processing-time timeout that :func:`_group_state_fn` arms."""
+    return grouped.applyInPandasWithState(
+        fn,
+        schema,
+        state_schema,
+        "append",
+        GroupStateTimeout.ProcessingTimeTimeout
+        if ttl_s is not None
+        else GroupStateTimeout.NoTimeout,
+    )
+
 
 TRANSITION_SCHEMA = T.StructType(
     [
@@ -40,10 +97,8 @@ def make_threshold_transition_fn(threshold: float, op: str = "gt"):
     State = last condition value; only changes emit (hysteresis suppression,
     commands.ts:951-957)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (active,) = state.get if state.exists else (None,)
+    def body(key, pdfs, st):
+        (active,) = st or (None,)
         out: list[dict[str, Any]] = []
         for pdf in pdfs:
             pdf = pdf.sort_values("signalk_timestamp")
@@ -77,25 +132,23 @@ def make_threshold_transition_fn(threshold: float, op: str = "gt"):
                             "event": "activated" if cond else "deactivated",
                         }
                     )
-        state.update((bool(active) if active is not None else None,))
-        yield pd.DataFrame(out, columns=[f.name for f in TRANSITION_SCHEMA.fields])
+        return (
+            (bool(active) if active is not None else None,),
+            pd.DataFrame(out, columns=TRANSITION_SCHEMA.fieldNames()),
+        )
 
-    return fn
+    return _group_state_fn(body, TRANSITION_SCHEMA)
 
 
 def streaming_threshold_transitions(
     stream: DataFrame, threshold: float, op: str = "gt"
 ) -> DataFrame:
     """stream must carry context, path, signalk_timestamp, value."""
-    return (
-        stream.groupBy("context", "path")
-        .applyInPandasWithState(
-            make_threshold_transition_fn(threshold, op),
-            outputStructType=TRANSITION_SCHEMA,
-            stateStructType=_TRANSITION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _apply_with_state(
+        stream.groupBy("context", "path"),
+        make_threshold_transition_fn(threshold, op),
+        TRANSITION_SCHEMA,
+        _TRANSITION_STATE,
     )
 
 
@@ -112,10 +165,8 @@ _EMA_STATE = T.StructType([T.StructField("prev", T.DoubleType())])
 
 
 def make_ema_fn(alpha: float = 0.2):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (prev,) = state.get if state.exists else (None,)
+    def body(key, pdfs, st):
+        (prev,) = st or (None,)
         out: list[dict[str, Any]] = []
         for pdf in pdfs:
             pdf = pdf.sort_values("signalk_timestamp")
@@ -135,19 +186,14 @@ def make_ema_fn(alpha: float = 0.2):
                         "ema": prev,
                     }
                 )
-        state.update((prev,))
-        yield pd.DataFrame(out, columns=[f.name for f in EMA_SCHEMA.fields])
+        return (prev,), pd.DataFrame(out, columns=EMA_SCHEMA.fieldNames())
 
-    return fn
+    return _group_state_fn(body, EMA_SCHEMA)
 
 
 def streaming_ema(stream: DataFrame, alpha: float = 0.2) -> DataFrame:
-    return stream.groupBy("context", "path").applyInPandasWithState(
-        make_ema_fn(alpha),
-        outputStructType=EMA_SCHEMA,
-        stateStructType=_EMA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _apply_with_state(
+        stream.groupBy("context", "path"), make_ema_fn(alpha), EMA_SCHEMA, _EMA_STATE
     )
 
 
@@ -167,11 +213,74 @@ def streaming_ema(stream: DataFrame, alpha: float = 0.2) -> DataFrame:
 # - STATE SIZE: state is partitioned by the groupBy key (context, path) —
 #   it scales out with shuffle partitions, and per-key state here is O(1)
 #   (last value / active flag), so the store stays tiny even at fleet scale.
-#   Use GroupStateTimeout (already set) so dead series age out.
+#   These two run without a timeout, so a dead series keeps its one
+#   value; the rungs below take ``ttl_s`` to age idle groups out.
 # - WATERMARKS: the rollup pipeline drops late data past the watermark;
 #   late-arriving back-exports should go through the BATCH rollup path
 #   (operators/rollups) instead of the stream.
 # ---------------------------------------------------------------------------
+
+
+# --- the near-dup rungs' keep-first-seen kernel ---------------------------------------
+def _keep_first_seen_fn(
+    schema: T.StructType,
+    id_col: str,
+    val_col: str,
+    max_bucket: int,
+    ttl_s: float | None,
+    load: Callable[[Any], Any],
+    match: Callable[[Any, Any], tuple | None],
+    dump: Callable[[Any], Any] = lambda entry: entry,
+    probe_col: str | None = None,
+    unique_ids: bool = False,
+):
+    """applyInPandasWithState function for one bucket of a streaming
+    near-dup rung — the ladder's ONE decision rule, shared by all six.
+
+    State is parallel arrays (ids, entries) of the bucket's kept arrivals
+    in insertion order. Each batch is walked in ``id_col`` order
+    (deterministic); an arrival's ``val_col`` decodes with ``load`` (the
+    same form a stored entry decodes to) and is compared against every
+    kept entry in insertion order. The FIRST kept entry for which
+    ``match(arrival, kept)`` returns score columns emits the row
+    (id, kept id, key[0], *scores) and the arrival is NOT stored — the
+    batch family's keep-lowest-id rule. A non-matching arrival joins the
+    state while fewer than ``max_bucket`` entries are kept (the winnowing
+    max_df lesson: an uncapped hot bucket grows O(n) state and O(n²)
+    compares). ``dump`` encodes an entry for the state struct (default:
+    as loaded).
+
+    ``probe_col`` names a boolean column: rows where it is false never
+    probe and go straight to the insert step. ``unique_ids`` refuses to
+    store an id the bucket already keeps. With ``ttl_s``, an idle bucket
+    is evicted (see :func:`_group_state_fn`)."""
+
+    def body(key, pdfs, st):
+        ids, kept = st or ([], [])
+        ids, kept = list(ids), [load(v) for v in kept]
+        out: list[tuple] = []
+        for pdf in pdfs:
+            pdf = pdf.sort_values(id_col)
+            # plain-list iteration: iterrows() costs a Series per row and
+            # dominated the whole stream's wall (measured 1.6x end-to-end)
+            probes = pdf[probe_col].tolist() if probe_col else [True] * len(pdf)
+            for i, v, probe in zip(pdf[id_col].tolist(), pdf[val_col].tolist(), probes):
+                a = load(v)
+                hit = None
+                if probe:
+                    for kid, k in zip(ids, kept):
+                        scores = match(a, k)
+                        if scores is not None:
+                            hit = (kid, scores)
+                            break
+                if hit is not None:
+                    out.append((int(i), int(hit[0]), int(key[0]), *hit[1]))
+                elif len(ids) < max_bucket and not (unique_ids and int(i) in ids):
+                    ids.append(int(i))
+                    kept.append(a)
+        return (ids, [dump(k) for k in kept]), pd.DataFrame(out, columns=schema.fieldNames())
+
+    return _group_state_fn(body, schema, ttl_s)
 
 
 # --- streaming MinHash near-dup dedup -------------------------------------------------
@@ -204,46 +313,14 @@ def make_neardup_fn(agree: float, max_bucket: int, ttl_s: float | None = None):
     at ``max_bucket`` entries (the winnowing max_df lesson: an uncapped hot
     bucket grows O(n) state and O(n²) compares)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in NEARDUP_MATCH_SCHEMA.fields])
-            return
-        ids, sigs = state.get if state.exists else ([], [])
-        ids, sigs = list(ids), [s.split("|") for s in sigs]
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("doc_id")
-            # plain-list iteration: iterrows() costs a Series per row and
-            # dominated the whole stream's wall (measured 1.6x end-to-end)
-            for doc_id, joined in zip(pdf["doc_id"].tolist(), pdf["sig"].tolist()):
-                sig = joined.split("|")
-                hit = None
-                for kept_id, kept_sig in zip(ids, sigs):
-                    n_eq = sum(1 for a, b in zip(sig, kept_sig) if a == b)
-                    if n_eq / len(sig) >= agree:
-                        hit = (kept_id, n_eq / len(sig))
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "dup_of": int(hit[0]),
-                            "band": int(key[0]),
-                            "agreement": hit[1],
-                        }
-                    )
-                elif len(ids) < max_bucket:
-                    ids.append(int(doc_id))
-                    sigs.append(sig)
-        state.update((ids, ["|".join(s) for s in sigs]))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in NEARDUP_MATCH_SCHEMA.fields])
+    def match(sig, kept):
+        agreement = sum(a == b for a, b in zip(sig, kept)) / len(sig)
+        return (agreement,) if agreement >= agree else None
 
-    return fn
+    return _keep_first_seen_fn(
+        NEARDUP_MATCH_SCHEMA, "doc_id", "sig", max_bucket, ttl_s,
+        load=lambda joined: joined.split("|"), dump="|".join, match=match,
+    )
 
 
 def streaming_neardup_minhash(
@@ -292,14 +369,12 @@ def streaming_neardup_minhash(
     exploded = stream.select(
         F.col(id_col).alias("doc_id"), sig.alias("sig"), F.posexplode(band_keys)
     ).withColumnsRenamed({"pos": "band", "col": "bkey"})
-    return exploded.groupBy("band", "bkey").applyInPandasWithState(
+    return _apply_with_state(
+        exploded.groupBy("band", "bkey"),
         make_neardup_fn(agree, max_bucket, ttl_s),
         NEARDUP_MATCH_SCHEMA,
         _NEARDUP_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        ttl_s,
     )
 
 
@@ -340,51 +415,20 @@ def make_containment_fn(threshold: float, max_bucket: int, ttl_s: float | None =
     drop distinct doc_ids, and the batch twin remains the exact
     arbiter."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in CONTAINMENT_MATCH_SCHEMA.fields])
-            return
-        ids, sets = state.get if state.exists else ([], [])
-        ids, sets = list(ids), list(sets)
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("doc_id")
-            for doc_id, sset, in_pre in zip(
-                pdf["doc_id"].tolist(), pdf["sset"].tolist(), pdf["in_prefix"].tolist()
-            ):
-                parts = sset.split("|")
-                a = set(parts)
-                size_a = len(parts)
-                hit = None
-                if in_pre:
-                    for kid, kset in zip(ids, sets):
-                        inter = len(a.intersection(kset.split("|")))
-                        if inter / size_a >= threshold:
-                            hit = (kid, inter)
-                            break
-                if hit is not None:
-                    out.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "contained_in": int(hit[0]),
-                            "tok": int(key[0]),
-                            "inter": int(hit[1]),
-                            "size_a": int(size_a),
-                            "containment": hit[1] / size_a,
-                        }
-                    )
-                elif len(ids) < max_bucket and int(doc_id) not in ids:
-                    ids.append(int(doc_id))
-                    sets.append(sset)
-        state.update((ids, sets))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in CONTAINMENT_MATCH_SCHEMA.fields])
+    def load(sset):
+        parts = sset.split("|")
+        return sset, set(parts), len(parts)
 
-    return fn
+    def match(a, kept):
+        inter = len(a[1] & kept[1])
+        size_a = a[2]
+        return (inter, size_a, inter / size_a) if inter / size_a >= threshold else None
+
+    return _keep_first_seen_fn(
+        CONTAINMENT_MATCH_SCHEMA, "doc_id", "sset", max_bucket, ttl_s,
+        load=load, dump=lambda e: e[0], match=match,
+        probe_col="in_prefix", unique_ids=True,
+    )
 
 
 def streaming_containment(
@@ -435,14 +479,12 @@ def streaming_containment(
         .withColumn("in_prefix", F.col("pos") < F.col("_pre_len"))
         .drop("_pre_len", "pos")
     )
-    return ex.groupBy("tok").applyInPandasWithState(
+    return _apply_with_state(
+        ex.groupBy("tok"),
         make_containment_fn(threshold, max_bucket, ttl_s),
         CONTAINMENT_MATCH_SCHEMA,
         _CONTAINMENT_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        ttl_s,
     )
 
 
@@ -475,48 +517,26 @@ def make_semantic_fn(tau: float, max_cell: int):
     stream fed in id order reproduces batch semantic_keep decisions
     exactly (pinned by test)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        ids, embs = state.get if state.exists else ([], [])
-        ids, embs = list(ids), [list(e) for e in embs]
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("vec_id")
-            for vec_id, emb in zip(pdf["vec_id"].tolist(), pdf["emb"].tolist()):
-                # plain Python floats: numpy scalars in the state tuple break
-                # the JVM-side unpickler (net.razorvine ClassDict error)
-                emb = [float(x) for x in emb]
-                n2 = 0.0
-                for x in emb:  # dim-ordered: matches the batch/oracle forms
-                    n2 += x * x
-                hit = None
-                for kept_id, kept in zip(ids, embs):
-                    dacc = 0.0
-                    kn2 = 0.0
-                    for a, b in zip(emb, kept):
-                        dacc += a * b
-                        kn2 += b * b
-                    cos = dacc / (n2 * kn2) ** 0.5
-                    if cos >= tau:
-                        hit = (kept_id, cos)
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "vec_id": int(vec_id),
-                            "dup_of": int(hit[0]),
-                            "cell": int(key[0]),
-                            "cos": hit[1],
-                        }
-                    )
-                elif len(ids) < max_cell:
-                    ids.append(int(vec_id))
-                    embs.append(emb)
-        state.update((ids, embs))
-        yield pd.DataFrame(out, columns=[f.name for f in SEMANTIC_MATCH_SCHEMA.fields])
+    def load(emb):
+        # plain Python floats: numpy scalars in the state tuple break
+        # the JVM-side unpickler (net.razorvine ClassDict error)
+        emb = [float(x) for x in emb]
+        n2 = 0.0
+        for x in emb:  # dim-ordered: matches the batch/oracle forms
+            n2 += x * x
+        return emb, n2
 
-    return fn
+    def match(a, kept):
+        dacc = 0.0
+        for x, y in zip(a[0], kept[0]):
+            dacc += x * y
+        cos = dacc / (a[1] * kept[1]) ** 0.5
+        return (cos,) if cos >= tau else None
+
+    return _keep_first_seen_fn(
+        SEMANTIC_MATCH_SCHEMA, "vec_id", "emb", max_cell, None,
+        load=load, dump=lambda e: e[0], match=match,
+    )
 
 
 def streaming_semantic_dedup(
@@ -559,12 +579,11 @@ def streaming_semantic_dedup(
     assigned = stream.select(
         F.col(id_col).alias("vec_id"), as_double(vec_col).alias("emb")
     ).withColumn("cell", cell_argmin_col(centroid_rows, "emb"))
-    return assigned.groupBy("cell").applyInPandasWithState(
+    return _apply_with_state(
+        assigned.groupBy("cell"),
         make_semantic_fn(tau, max_cell),
         SEMANTIC_MATCH_SCHEMA,
         _SEMANTIC_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -604,48 +623,16 @@ def make_audio_neardup_fn(max_ber: float, max_bucket: int, ttl_s: float | None =
     # computed once here and captured by the closure (the fn runs once
     # per occupied bucket per trigger)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in AUDIO_MATCH_SCHEMA.fields])
-            return
-        ids, fps = state.get if state.exists else ([], [])
-        ids, fps = list(ids), [list(f) for f in fps]
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("media_id")
-            for mid, fp in zip(pdf["media_id"].tolist(), pdf["fp"].tolist()):
-                fp = [int(v) for v in fp]
-                hit = None
-                for kid, kfp in zip(ids, fps):
-                    n = min(len(fp), len(kfp))
-                    errs = sum(
-                        bin(a ^ b).count("1") for a, b in zip(fp[:n], kfp[:n])
-                    )
-                    ber = errs / (bits * n)
-                    if ber <= max_ber:
-                        hit = (kid, ber)
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "dup_of": int(hit[0]),
-                            "pos": int(key[0]),
-                            "ber": hit[1],
-                        }
-                    )
-                elif len(ids) < max_bucket:
-                    ids.append(int(mid))
-                    fps.append(fp)
-        state.update((ids, fps))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in AUDIO_MATCH_SCHEMA.fields])
+    def match(fp, kept):
+        n = min(len(fp), len(kept))
+        errs = sum(bin(a ^ b).count("1") for a, b in zip(fp[:n], kept[:n]))
+        ber = errs / (bits * n)
+        return (ber,) if ber <= max_ber else None
 
-    return fn
+    return _keep_first_seen_fn(
+        AUDIO_MATCH_SCHEMA, "media_id", "fp", max_bucket, ttl_s,
+        load=lambda fp: [int(v) for v in fp], match=match,
+    )
 
 
 def streaming_audio_neardup(
@@ -696,14 +683,12 @@ def streaming_audio_neardup(
         with_fp.select("media_id", "fp", F.posexplode("fp").alias("pos", "sub"))
         .filter(F.col("pos") % every_pos == 0)
     )
-    return exploded.groupBy("pos", "sub").applyInPandasWithState(
+    return _apply_with_state(
+        exploded.groupBy("pos", "sub"),
         make_audio_neardup_fn(max_ber, max_bucket, ttl_s),
         AUDIO_MATCH_SCHEMA,
         _AUDIO_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        ttl_s,
     )
 
 
@@ -732,44 +717,14 @@ def make_image_neardup_fn(max_hamming: int, max_bucket: int, ttl_s: float | None
     match event; otherwise it joins the bucket (capped). TTL as in the
     audio rung."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in IMAGE_MATCH_SCHEMA.fields])
-            return
-        ids, hs = state.get if state.exists else ([], [])
-        ids, hs = list(ids), list(hs)
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("media_id")
-            for mid, h in zip(pdf["media_id"].tolist(), pdf["h"].tolist()):
-                h = int(h)
-                hit = None
-                for kid, kh in zip(ids, hs):
-                    ham = bin((h ^ int(kh)) & ((1 << 64) - 1)).count("1")
-                    if ham <= max_hamming:
-                        hit = (kid, ham)
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "dup_of": int(hit[0]),
-                            "band": int(key[0]),
-                            "hamming": int(hit[1]),
-                        }
-                    )
-                elif len(ids) < max_bucket:
-                    ids.append(int(mid))
-                    hs.append(h)
-        state.update((ids, hs))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in IMAGE_MATCH_SCHEMA.fields])
+    def match(h, kept):
+        ham = bin((h ^ kept) & ((1 << 64) - 1)).count("1")
+        return (ham,) if ham <= max_hamming else None
 
-    return fn
+    return _keep_first_seen_fn(
+        IMAGE_MATCH_SCHEMA, "media_id", "h", max_bucket, ttl_s,
+        load=int, match=match,
+    )
 
 
 def streaming_image_neardup(
@@ -818,14 +773,12 @@ def streaming_image_neardup(
             ])
         ).alias("band", "bval"),
     )
-    return exploded.groupBy("band", "bval").applyInPandasWithState(
+    return _apply_with_state(
+        exploded.groupBy("band", "bval"),
         make_image_neardup_fn(max_hamming, max_bucket, ttl_s),
         IMAGE_MATCH_SCHEMA,
         _IMAGE_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        ttl_s,
     )
 
 
@@ -857,59 +810,25 @@ def make_video_neardup_fn(
     arithmetic); frac >= ``min_frac`` emits a match, else the clip joins
     the bucket (capped). TTL as in the audio rung."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in VIDEO_MATCH_SCHEMA.fields])
-            return
-        ids, fhs = state.get if state.exists else ([], [])
+    def load(fh):
         # slot-dense hash lists: None marks an undecodable frame, so
         # alignment is by FRAME SLOT, not list position — one corrupt
         # frame must not shift every later comparison (state arrays hold
         # the None slots as SQL nulls)
-        ids = list(ids)
-        fhs = [[None if v is None else int(v) for v in f] for f in fhs]
-        out: list[dict[str, Any]] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("media_id")
-            for mid, fh in zip(pdf["media_id"].tolist(), pdf["fh"].tolist()):
-                fh = [None if v is None else int(v) for v in fh]
-                hit = None
-                for kid, kfh in zip(ids, fhs):
-                    pairs = [
-                        (a, b)
-                        for a, b in zip(fh, kfh)
-                        if a is not None and b is not None
-                    ]
-                    n = len(pairs)
-                    m = sum(
-                        1
-                        for a, b in pairs
-                        if bin((a ^ b) & ((1 << 64) - 1)).count("1") <= max_hamming
-                    )
-                    if n >= min_aligned and m / n >= min_frac:
-                        hit = (kid, m / n)
-                        break
-                if hit is not None:
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "dup_of": int(hit[0]),
-                            "frame_pos": int(key[0]),
-                            "frac": hit[1],
-                        }
-                    )
-                elif len(ids) < max_bucket:
-                    ids.append(int(mid))
-                    fhs.append(fh)
-        state.update((ids, fhs))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        yield pd.DataFrame(out, columns=[f.name for f in VIDEO_MATCH_SCHEMA.fields])
+        return [None if v is None else int(v) for v in fh]
 
-    return fn
+    def match(fh, kept):
+        pairs = [(a, b) for a, b in zip(fh, kept) if a is not None and b is not None]
+        n = len(pairs)
+        m = sum(
+            1 for a, b in pairs if bin((a ^ b) & ((1 << 64) - 1)).count("1") <= max_hamming
+        )
+        return (m / n,) if n >= min_aligned and m / n >= min_frac else None
+
+    return _keep_first_seen_fn(
+        VIDEO_MATCH_SCHEMA, "media_id", "fh", max_bucket, ttl_s,
+        load=load, match=match,
+    )
 
 
 def streaming_video_neardup(
@@ -976,14 +895,12 @@ def streaming_video_neardup(
             ).alias("band", "bval"),
         )
     )
-    return exploded.groupBy("frame_pos", "band", "bval").applyInPandasWithState(
+    return _apply_with_state(
+        exploded.groupBy("frame_pos", "band", "bval"),
         make_video_neardup_fn(min_frac, max_hamming, max_bucket, ttl_s, min_aligned),
         VIDEO_MATCH_SCHEMA,
         _VIDEO_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        ttl_s,
     )
 
 
@@ -1082,14 +999,8 @@ def _make_mg_state_fn(m: int, ttl_s: float | None, schema: T.StructType, emit_ke
     With ``ttl_s``, a group idle past the TTL drops its counters — the
     windowed "trending lately" semantics."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in schema.fields])
-            return
-        toks, wts, n_seen = state.get if state.exists else ([], [], 0)
+    def body(key, pdfs, st):
+        toks, wts, n_seen = st or ([], [], 0)
         c = dict(zip(list(toks), list(wts)))
         n_seen = int(n_seen)
         got = False
@@ -1110,23 +1021,15 @@ def _make_mg_state_fn(m: int, ttl_s: float | None, schema: T.StructType, emit_ke
                         c[k] -= 1
                     for k in dead:
                         del c[k]
-        state.update((list(c), [int(v) for v in c.values()], n_seen))
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        if got and c:
-            yield pd.DataFrame(
-                {
-                    **emit_key(key),
-                    "token": list(c),
-                    "wt": [int(v) for v in c.values()],
-                    "n_seen": n_seen,
-                },
-                columns=[f.name for f in schema.fields],
-            )
-        else:
-            yield pd.DataFrame(columns=[f.name for f in schema.fields])
+        new_state = (list(c), [int(v) for v in c.values()], n_seen)
+        if not (got and c):
+            return new_state, pd.DataFrame(columns=schema.fieldNames())
+        return new_state, pd.DataFrame(
+            {**emit_key(key), "token": new_state[0], "wt": new_state[1], "n_seen": n_seen},
+            columns=schema.fieldNames(),
+        )
 
-    return fn
+    return _group_state_fn(body, schema, ttl_s)
 
 
 def make_heavy_hitters_fn(m: int, ttl_s: float | None = None):
@@ -1173,14 +1076,12 @@ def streaming_heavy_hitters(
             % n_groups
         ).cast("int"),
     )
-    return toks.groupBy("grp").applyInPandasWithState(
+    return _apply_with_state(
+        toks.groupBy("grp"),
         make_heavy_hitters_fn(m, ttl_s),
         HH_SKETCH_SCHEMA,
         _HH_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        ttl_s,
     )
 
 
@@ -1245,7 +1146,8 @@ def streaming_grouped_heavy_hitters(
             ).cast("int"),
         )
     )
-    return toks.groupBy("g", "grp").applyInPandasWithState(
+    return _apply_with_state(
+        toks.groupBy("g", "grp"),
         _make_mg_state_fn(
             m,
             ttl_s,
@@ -1254,10 +1156,7 @@ def streaming_grouped_heavy_hitters(
         ),
         GHH_SKETCH_SCHEMA,
         _HH_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        ttl_s,
     )
 
 
@@ -1291,16 +1190,8 @@ def make_weighted_sample_fn(k: int, ttl_s: float | None = None):
     pure function of (id, salt), so a replay carries the identical key and
     set-dedup makes the state exactly-once by construction."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in WSAMPLE_SCHEMA.fields])
-            return
-        ids, wts, keys, n_seen = (
-            state.get if state.exists else ([], [], [], 0)
-        )
+    def body(key, pdfs, st):
+        ids, wts, keys, n_seen = st or ([], [], [], 0)
         entries = list(zip(list(keys), list(ids), list(wts)))
         seen = set(ids)
         n_seen = int(n_seen)
@@ -1321,31 +1212,16 @@ def make_weighted_sample_fn(k: int, ttl_s: float | None = None):
         # total order: key DESC, id ASC — the batch operator's ordering
         entries.sort(key=lambda t: (-t[0], t[1]))
         entries = entries[:k]
-        state.update(
-            (
-                [e[1] for e in entries],
-                [e[2] for e in entries],
-                [e[0] for e in entries],
-                n_seen,
-            )
+        skeys, sids, swts = (list(col) for col in zip(*entries)) if entries else ([], [], [])
+        new_state = (sids, swts, skeys, n_seen)
+        if not (got and entries):
+            return new_state, pd.DataFrame(columns=WSAMPLE_SCHEMA.fieldNames())
+        return new_state, pd.DataFrame(
+            {"grp": int(key[0]), "id": sids, "wt": swts, "skey": skeys, "n_seen": n_seen},
+            columns=WSAMPLE_SCHEMA.fieldNames(),
         )
-        if ttl_s is not None:
-            state.setTimeoutDuration(int(ttl_s * 1000))
-        if got and entries:
-            yield pd.DataFrame(
-                {
-                    "grp": int(key[0]),
-                    "id": [e[1] for e in entries],
-                    "wt": [e[2] for e in entries],
-                    "skey": [e[0] for e in entries],
-                    "n_seen": n_seen,
-                },
-                columns=[f.name for f in WSAMPLE_SCHEMA.fields],
-            )
-        else:
-            yield pd.DataFrame(columns=[f.name for f in WSAMPLE_SCHEMA.fields])
 
-    return fn
+    return _group_state_fn(body, WSAMPLE_SCHEMA, ttl_s)
 
 
 def streaming_weighted_sample(
@@ -1413,12 +1289,10 @@ def streaming_weighted_sample(
             % n_groups
         ).cast("int").alias("grp"),
     )
-    return keyed.groupBy("grp").applyInPandasWithState(
+    return _apply_with_state(
+        keyed.groupBy("grp"),
         make_weighted_sample_fn(k, ttl_s),
         WSAMPLE_SCHEMA,
         _WSAMPLE_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_s is not None
-        else GroupStateTimeout.NoTimeout,
+        ttl_s,
     )

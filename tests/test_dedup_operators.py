@@ -150,6 +150,24 @@ def test_kmeans_local_rung_matches_python_reference(spark):
         )
 
 
+def test_kmeans_local_rung_duplicate_ids_keep_arrival_order():
+    """The local Lloyd rung sorts rows by id with ties in arrival order,
+    so duplicate ids still give one answer: fitting a frame equals fitting
+    the same frame pre-sorted by a stable sort (an unstable argsort
+    permutes the duplicates, which moves the seeded init picks)."""
+    import numpy as np
+    import pandas as pd
+    from signalk_parquet_spark.operators.similarity import _local_lloyd
+
+    rng = np.random.default_rng(5)
+    ids = [int(i) for i in rng.integers(0, 8, size=64)]
+    pdf = pd.DataFrame(
+        {"id": ids, "v": [[float(v) for v in r] for r in rng.normal(size=(64, 3))]}
+    )
+    presorted = pdf.iloc[sorted(range(64), key=lambda r: ids[r])]
+    assert _local_lloyd(pdf, 4, 7, 5) == _local_lloyd(presorted, 4, 7, 5)
+
+
 def test_kmeans_both_rungs_serve_ivf(spark):
     """The distributed MLlib rung (local_threshold=0) and the driver-local
     rung produce different-but-valid quantizers: both must carry the IVF
@@ -543,6 +561,36 @@ def test_prefix_jaccard_matches_bruteforce(spark):
         if a and b and len(a & b) / len(a | b) >= 0.5:
             want.add((x, y))
     assert got == want and (0, 100) in want
+
+
+def test_prefix_jaccard_float_rounded_threshold_matches_bruteforce(spark):
+    """t·|S| that float-rounds just above an integer must not shorten the
+    prefix: with t = 0.07 and |x| = 100, 0.07·100 = 7.000000000000001. y is
+    the 7 elements of x ranked last in both prefix orders (largest hashes,
+    and the only df-2 tokens), so J(x, y) = 7/100 = t exactly and the pair
+    is found only if x's prefix keeps |x| − 7 + 1 = 94 elements."""
+    import itertools
+    from signalk_parquet_spark.operators.dedup import prefix_jaccard_pairs
+
+    sets = {1: list(range(1, 101)), 2: list(range(94, 101)), 3: [500, 501, 502]}
+    prepared = spark.createDataFrame(
+        [(i, "xx", s) for i, s in sets.items()], "id long, lang string, shl array<bigint>"
+    )
+    want = {
+        (a, b)
+        for a, b in itertools.combinations(sorted(sets), 2)
+        if len(set(sets[a]) & set(sets[b])) / len(set(sets[a]) | set(sets[b])) >= 0.07
+    }
+    assert want == {(1, 2)}
+    for rare_first in (True, False):
+        got = {
+            (r["id_a"], r["id_b"])
+            for r in prefix_jaccard_pairs(
+                None, "doc_id", "text", ["lang"], 0.07,
+                prepared=prepared, rare_first=rare_first,
+            ).collect()
+        }
+        assert got == want, rare_first
 
 
 def test_semantic_keep_matches_bruteforce(spark):

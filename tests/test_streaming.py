@@ -703,6 +703,7 @@ def test_stateful_fns_timeout_branches_evict():
 
     from signalk_parquet_spark.streaming.stateful import (
         make_audio_neardup_fn,
+        make_containment_fn,
         make_image_neardup_fn,
         make_neardup_fn,
         make_video_neardup_fn,
@@ -711,6 +712,8 @@ def test_stateful_fns_timeout_branches_evict():
     cases = [
         (make_neardup_fn(0.5, 64, ttl_s=2.0), (0, "k"),
          pd.DataFrame({"doc_id": [1], "sig": ["a|b|c|d"]})),
+        (make_containment_fn(0.8, 64, ttl_s=2.0), (7,),
+         pd.DataFrame({"doc_id": [1], "sset": ["1|2|3"], "in_prefix": [True]})),
         (make_audio_neardup_fn(0.35, 64, ttl_s=2.0), (0, 7),
          pd.DataFrame({"media_id": [1], "fp": [[5, 6]]})),
         (make_image_neardup_fn(3, 64, ttl_s=2.0), (0, 7),
@@ -738,8 +741,10 @@ def test_stateful_fns_match_path_keeps_state_unchanged():
 
     from signalk_parquet_spark.streaming.stateful import (
         make_audio_neardup_fn,
+        make_containment_fn,
         make_image_neardup_fn,
         make_neardup_fn,
+        make_semantic_fn,
         make_video_neardup_fn,
     )
 
@@ -747,6 +752,12 @@ def test_stateful_fns_match_path_keeps_state_unchanged():
         (make_neardup_fn(0.5, 64), (0, "k"),
          pd.DataFrame({"doc_id": [1], "sig": ["a|b|c|d"]}),
          pd.DataFrame({"doc_id": [9], "sig": ["a|b|c|X"]})),   # 3/4 agree
+        (make_containment_fn(0.8, 64), (7,),
+         pd.DataFrame({"doc_id": [1], "sset": ["1|2|3|4|5"], "in_prefix": [True]}),
+         pd.DataFrame({"doc_id": [9], "sset": ["1|2|3|4"], "in_prefix": [True]})),  # 4/4 inside
+        (make_semantic_fn(0.9, 64), (3,),
+         pd.DataFrame({"vec_id": [1], "emb": [[1.0, 0.0]]}),
+         pd.DataFrame({"vec_id": [9], "emb": [[1.0, 0.1]]})),  # cos 0.995
         (make_audio_neardup_fn(0.35, 64), (0, 7),
          pd.DataFrame({"media_id": [1], "fp": [[5, 6]]}),
          pd.DataFrame({"media_id": [9], "fp": [[5, 7]]})),     # few bit errors
@@ -788,6 +799,83 @@ def test_stateful_fns_bucket_cap_stops_growth():
     out = [r for o in fn((0, 7), iter([pd.DataFrame({"media_id": [9], "h": [far[1]]})]), st)
            for _, r in o.iterrows()]
     assert len(out) == 1 and out[0].iloc[1] == 1
+
+
+def _fake_events(fn, key, pdf, st):
+    return [tuple(r) for o in fn(key, iter([pdf]), st) for r in o.itertuples(index=False)]
+
+
+def test_stateful_fns_bucket_cap_all_rungs():
+    """The cap case for all six near-dup rungs: with max_bucket=2, a third
+    pairwise-non-matching arrival neither joins nor emits, and a copy of
+    the second KEPT entry still matches it once the bucket is full."""
+    import pandas as pd
+
+    from signalk_parquet_spark.streaming.stateful import (
+        make_audio_neardup_fn,
+        make_containment_fn,
+        make_image_neardup_fn,
+        make_neardup_fn,
+        make_semantic_fn,
+        make_video_neardup_fn,
+    )
+
+    def frames(id_col, col, vals, **extra):
+        return [
+            pd.DataFrame({id_col: [i], col: [v], **{c: [x] for c, x in extra.items()}})
+            for i, v in enumerate(vals)
+        ]
+
+    full = (1 << 25) - 1  # all bits of a 25-bit audio sub-fingerprint
+    cases = [
+        (make_neardup_fn(0.5, 2), (0, "k"),
+         frames("doc_id", "sig", ["a|b|c|d", "e|f|g|h", "i|j|k|l"])),
+        (make_containment_fn(0.8, 2), (7,),
+         frames("doc_id", "sset", ["1|2|3", "4|5|6", "7|8|9"], in_prefix=True)),
+        (make_semantic_fn(0.9, 2), (3,),
+         frames("vec_id", "emb", [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]])),
+        (make_audio_neardup_fn(0.35, 2), (0, 7),
+         frames("media_id", "fp", [[0, 0], [full, full], [0x1FFF, 0x1FFF]])),
+        (make_image_neardup_fn(0, 2), (0, 7),
+         frames("media_id", "h", [0, 1 << 20, 1 << 40])),
+        (make_video_neardup_fn(0.5, 3, 2), (0, 0, 7),
+         frames("media_id", "fh", [[0xFF, 0xFF], [0xFF00, 0xFF00], [0xFF0000, 0xFF0000]])),
+    ]
+    for fn, key, pdfs in cases:
+        st = _FakeState()
+        for pdf in pdfs:
+            assert _fake_events(fn, key, pdf, st) == [], fn
+        ids, entries = st.get
+        assert list(ids) == [0, 1] and len(entries) == 2, fn  # third never joined
+        kept_after_cap = st.get
+        copy = pdfs[1].assign(**{pdfs[1].columns[0]: [9]})
+        out = _fake_events(fn, key, copy, st)
+        assert [(r[0], r[1]) for r in out] == [(9, 1)], fn
+        assert st.get == kept_after_cap, fn
+
+
+def test_stateful_containment_non_prefix_rows_never_probe():
+    """Containment probes only prefix rows: a non-prefix row whose set is
+    fully inside a kept set emits nothing and is kept instead, and an id
+    the group already keeps is never stored twice."""
+    import pandas as pd
+
+    from signalk_parquet_spark.streaming.stateful import make_containment_fn
+
+    fn = make_containment_fn(0.8, 64)
+    st = _FakeState()
+
+    def arrive(doc_id, sset, in_prefix):
+        pdf = pd.DataFrame({"doc_id": [doc_id], "sset": [sset], "in_prefix": [in_prefix]})
+        return _fake_events(fn, (7,), pdf, st)
+
+    assert arrive(1, "1|2|3|4|5", True) == []
+    assert arrive(9, "1|2|3|4", False) == []      # contained, but not a prefix row
+    assert list(st.get[0]) == [1, 9]
+    assert arrive(9, "1|2|3|4", False) == []      # re-delivery: no second copy
+    assert list(st.get[0]) == [1, 9]
+    out = arrive(5, "1|2|3|4", True)              # the same set as a prefix row
+    assert [(r[0], r[1], r[2]) for r in out] == [(5, 1, 7)]
 
 
 def test_streaming_bloom_screen_matches_batch_gate(spark, tmp_path):
